@@ -186,9 +186,10 @@ def halves32(words: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
 
 
 def string_spans(arr) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """(data, starts, lens, valid) of a pyarrow String/LargeString
-    array — the zero-copy view every kernel here slices. Handles chunk
-    slice offsets. Returns (data_u8, offsets_i64, valid_bool)."""
+    """(data, offsets, valid) of a pyarrow String/LargeString array —
+    the zero-copy view every kernel here slices. Handles chunk slice
+    offsets: row i's bytes are ``data[offsets[i]:offsets[i + 1]]``.
+    Returns (data_u8, offsets_i64, valid_bool)."""
     import pyarrow as pa
 
     if isinstance(arr, pa.ChunkedArray):
@@ -285,12 +286,16 @@ def dedup_spans(
         len_eq = lens[a] == lens[b]
         bytes_eq = len_eq.copy()
         if bytes_eq.any():
-            w = int(lens[b][len_eq].max(initial=0))
-            cols = np.arange(w)
-            av = data[starts[a][len_eq][:, None] + cols[None, :]]
-            bv = data[starts[b][len_eq][:, None] + cols[None, :]]
-            mask = cols[None, :] < lens[b][len_eq][:, None]
-            bytes_eq[len_eq] = np.all((av == bv) | ~mask, axis=1)
+            # gather only each pair's own bytes: a short pair padded to
+            # the longest pair's width would read past the buffer's end
+            ln = lens[b][len_eq]
+            cols = np.arange(int(ln.max(initial=0)))
+            valid = cols[None, :] < ln[:, None]
+            ai = (starts[a][len_eq][:, None] + cols[None, :])[valid]
+            bi = (starts[b][len_eq][:, None] + cols[None, :])[valid]
+            differs = np.zeros(valid.shape, dtype=bool)
+            differs[valid] = data[ai] != data[bi]
+            bytes_eq[len_eq] = ~differs.any(axis=1)
         if not bytes_eq.all():  # pragma: no cover - md5 collision
             return _dedup_exact_fallback(data, row_idx, starts, lens)
         same[dup_pos] = bytes_eq

@@ -4,6 +4,16 @@ Local mode is a single JVM; ``spark.driver.memory`` is the only memory
 knob. Shuffle partitions default to the core count — at cluster scale the
 engine relies on AQE coalescing + explicit repartition-by-time-bucket
 before grouped-UDF stages (see operators/label.py).
+
+Python workers run under the engine's own worker daemon,
+``marex_spark._worker_daemon`` (``spark.python.daemon.module``). pyspark
+invalidates the import caches before every task, and CPython 3.11's zip
+importers then re-read ``pyspark.zip`` and the Spark core jar: about
+0.2 s of CPU per task before any kernel starts (PERF.md, "Per-task
+Python worker cost"). The daemon keeps an importer's directory until its
+archive changes. The engine's import root goes on the workers'
+``PYTHONPATH``, so the daemon and every kernel import whatever directory
+the driver runs from.
 """
 
 from __future__ import annotations
@@ -11,6 +21,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# the directory holding the marex_spark package
+_IMPORT_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -60,6 +73,8 @@ def get_spark(
         .config("spark.executorEnv.OPENBLAS_NUM_THREADS", "1")
         .config("spark.executorEnv.OMP_NUM_THREADS", "1")
         .config("spark.executorEnv.MKL_NUM_THREADS", "1")
+        .config("spark.executorEnv.PYTHONPATH", _IMPORT_ROOT)
+        .config("spark.python.daemon.module", "marex_spark._worker_daemon")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
